@@ -32,6 +32,27 @@ Scale design notes
   only below ``broadcast_key_limit`` keys; above it the joins fall back to
   AQE-planned shuffle joins (with skew-split enabled in the session).
 
+One pipeline
+------------
+Every merge commit runs the same two private steps:
+
+* ``_prepare(snapshot) -> PreparedMerge`` — fence check, stages, the
+  ``_bucket`` guard, schema evolution, the phase-1 stats job (or a valid
+  ``PrecomputedStats``), winner derivation (insert-only fast path,
+  single-phase struct-max above the broadcast limit, broadcast join-back
+  + tie dedup; the fused small-state CoW merge runs the struct-max over
+  current ∪ batch), the changelog sidecar and the bucket-file write.
+  Nothing is published.
+* ``_publish(prepared, expected_version)`` — fence + delta properties, the
+  commit summary, replaced buckets, and the CommitConflict -> "fence
+  already past, so skip" check.
+
+``merge_apply`` is prepare against the live snapshot, then publish pinned
+to its version (CAS-retried ``conflict_retries`` times). MOR pipelining
+(``replay_events``) is the same prepare run ahead against an ASSUMED
+snapshot (``prepare_mor_merge``) and a publish that re-validates the
+assumptions first (``commit_prepared_merge``).
+
 The reference's analogue is in-memory ``{**item, **output}`` row merging
 (docetl/operations/map.py:414) plus JSON checkpoints
 (docetl/runner.py:546-663); here both become transactional table commits.
@@ -61,30 +82,30 @@ DELETED_COL = "_deleted"  # tombstone flag: deletes keep (key, lsn) so a
 
 TransformStage = Callable[[DataFrame], DataFrame]
 
-# -- scale-adaptive knobs (env-overridable, guide §2: partitioning must
-# derive from input size, not a constant tuned for one deployment) --------
+# -- size gates (guide §2: partitioning must derive from input size, not
+# a constant tuned for one deployment) ------------------------------------
 
-def _cow_consolidate_bytes() -> int:
-    """CoW merges whose affected buckets hold at most this many bytes
-    shuffle the (small) survivors together with the winners so every
-    rewritten bucket lands in exactly ONE file. Without it, file-aligned
-    survivor writes fragment each bucket by ~one file per batch, and the
-    per-merge driver cost (file listing, footer stats, scan planning)
-    grows linearly with batch count — measured 435 ms/merge of pure
-    driver plan-building at 48 files vs ~150 ms at 16. Above the
-    threshold the wide-row rule wins (survivors never shuffle; periodic
-    compaction owns file counts)."""
-    return int(os.environ.get("SPARK_GRAFT_COW_CONSOLIDATE_BYTES", str(256 << 20)))
+# CoW merges whose affected buckets hold at most this many bytes shuffle
+# the (small) survivors together with the winners so every rewritten
+# bucket lands in exactly ONE file. Without it, file-aligned survivor
+# writes fragment each bucket by ~one file per batch, and the per-merge
+# driver cost (file listing, footer stats, scan planning) grows linearly
+# with batch count — measured 435 ms/merge of pure driver plan-building at
+# 48 files vs ~150 ms at 16. Above the threshold the wide-row rule wins
+# (survivors never shuffle; periodic compaction owns file counts).
+COW_CONSOLIDATE_BYTES = 256 << 20
 
-
-def _batch_persist_rows() -> int:
-    """Batches at or below this many events are persisted for the merge's
-    duration: the batch plan is read 2-3x (winning-key aggregate, winner
-    join-back) and for small batches a one-shot cache is cheaper than
-    re-running the scan+filter lineage each time. Large batches stream
-    (caching 10^9 rows trades a cheap rescan for executor memory/disk
-    pressure — the wrong trade, so the gate defaults to 4M events)."""
-    return int(os.environ.get("SPARK_GRAFT_BATCH_PERSIST_ROWS", str(4_000_000)))
+# Batches at or below this many events are persisted for the merge's
+# duration: the batch plan is read 2-3x (winning-key aggregate, winner
+# join-back) and for small batches a one-shot cache is cheaper than
+# re-running the scan+filter lineage each time. Large batches stream
+# (caching 10^9 rows trades a cheap rescan for executor memory/disk
+# pressure — the wrong trade, so the gate is 4M events). CoW-only:
+# persisting the bench's 1M-event MOR batches measured a 2.2x replay
+# REGRESSION (338 s vs 153 s at 20M events) — memory-store
+# materialization under 32 concurrent tasks costs far more than the
+# pruned binlog re-scan it saves.
+BATCH_PERSIST_ROWS = 4_000_000
 
 
 def reject_reserved_columns(df: DataFrame, caller: str,
@@ -281,12 +302,12 @@ def _per_bucket_stats(wk: DataFrame, table: LakeTable, snap: Snapshot) -> DataFr
 
 @dataclass
 class PreparedMerge:
-    """A MOR merge whose data files are fully written but whose snapshot is
-    not yet published (see ``prepare_mor_merge`` / ``commit_prepared_merge``).
-    Carries the assumption set the files were written under; commit
-    validates it against the live snapshot and refuses (returns None) on
-    any drift — the files then stay unreferenced (vacuum reclaims them,
-    exactly like a losing concurrent-commit attempt)."""
+    """A merge whose data files are fully written but whose snapshot is not
+    yet published: the hand-off from ``_prepare`` to ``_publish``. Carries
+    the assumption set the files were written under (schema, bucket spec,
+    the snapshot version they were planned against). A prepare that is
+    never published leaves its files unreferenced — vacuum reclaims them,
+    exactly like a losing concurrent-commit attempt."""
 
     batch_id: int
     new_files: dict
@@ -295,6 +316,336 @@ class PreparedMerge:
     num_buckets: int
     bucket_cols: tuple | None
     key_cols: tuple
+    mode: str
+    base_version: int
+    replaced: frozenset = frozenset()
+    changelog: list[str] | None = None
+
+
+def _fence(snap: Snapshot, fence_prop: str) -> int:
+    return int(snap.properties.get(fence_prop, "-1"))
+
+
+def _bucket_cols(snap: Snapshot) -> tuple | None:
+    return tuple(snap.bucket_cols) if snap.bucket_cols else None
+
+
+def _prepare(
+    spark: SparkSession,
+    table: LakeTable,
+    batch: DataFrame,
+    batch_id: int,
+    snap: Snapshot,
+    *,
+    stages: Iterable[TransformStage],
+    winner_stages: Iterable[TransformStage],
+    broadcast_key_limit: int,
+    strict_lww_ties: bool,
+    fence_prop: str,
+    mode: str,
+    precomputed: PrecomputedStats | None = None,
+    changelog: bool = False,
+    speculative: bool = False,
+) -> PreparedMerge | None:
+    """Everything of one merge up to (not including) its commit, planned
+    against ``snap``: fence check, stages, schema evolution, the stats job,
+    winner derivation, the changelog sidecar and the bucket-file write.
+
+    Returns None when ``snap``'s fence is already at or past ``batch_id``.
+    A ``speculative`` prepare (against an assumed snapshot, commit
+    deferred) also returns None when the batch evolves the schema:
+    evolution may rewrite live files (``_widen_rewrite``) and rewrites the
+    assumptions of every later in-flight prepare, so only the serial path
+    owns it. Speculative files are named by batch id, since the version
+    they will commit as is not known yet."""
+    t0 = time.time()
+    if batch_id <= _fence(snap, fence_prop):
+        return None  # already committed: idempotent replay no-op
+
+    for stage in stages:
+        batch = stage(batch)
+    winner_stages = tuple(winner_stages)
+
+    def _winner_staged(df: DataFrame) -> DataFrame:
+        for stage in winner_stages:
+            df = stage(df)
+        return df
+
+    # schema evolution must account for winner-stage output columns too:
+    # probe them against an empty frame (no data moves, plan-only)
+    staged_empty = _winner_staged(batch.limit(0))
+    if any(c.lower() == "_bucket" for c in staged_empty.columns):
+        # the write path overwrites _bucket with the hash-bucket id and the
+        # partitioned write then strips it — a data column named _bucket
+        # would be silently destroyed, so refuse it loudly
+        raise SchemaError(
+            "'_bucket' is a reserved lake column (the merge overwrites it "
+            "with the hash-bucket id); rename it upstream"
+        )
+    # -- in-flight schema evolution -------------------------------------
+    payload_fields = [f for f in staged_empty.schema.fields if f.name not in CONTROL_COLS]
+    incoming = T.StructType(
+        payload_fields
+        + [T.StructField("lsn", T.LongType(), True), T.StructField(DELETED_COL, T.BooleanType(), True)]
+    )
+    evolved = merge_schemas(snap.schema, incoming)
+    if speculative and evolved != snap.schema:
+        return None
+    if snap.all_files and _unsupported_upcast_paths(snap.schema, evolved):
+        # widening beyond what the parquet reader upcasts (long->double):
+        # rewrite live files under the evolved schema first, then merge
+        # against the fresh snapshot
+        snap = _widen_rewrite(spark, table, snap, evolved)
+    spec = Snapshot(**{**snap.__dict__, "schema": evolved})
+    key_cols = snap.key_cols
+    is_mor = mode == "mor"
+
+    # -- Phase 1: narrow winning-key aggregate. Only (key, lsn, op) leave
+    # the scan (parquet column pruning), partial combine collapses hot
+    # keys map-side, and the shuffle carries no payload bytes. Kept lazy:
+    # the stats job pipelines through it without materializing the keyset;
+    # it is persisted below ONLY if the merge actually reuses it (current
+    # state exists), since on an initial load pinning millions of winner
+    # keys in the memory store is pure churn.
+    wk = _winning_keys(batch, key_cols)
+    # One collect serves both lineage stats and the affected-bucket list:
+    # per-bucket partials (<= num_buckets rows) combined driver side. A
+    # valid PrecomputedStats (same bucket function, same batch — see
+    # replay_events' look-ahead) skips the collect entirely: its job
+    # already ran overlapped with the previous batch's write.
+    if (
+        precomputed is not None
+        and precomputed.batch_id == batch_id
+        and precomputed.key_cols == tuple(key_cols)
+        and precomputed.num_buckets == snap.num_buckets
+    ):
+        per_bucket = precomputed.rows
+    else:
+        per_bucket = _per_bucket_stats(wk, table, spec).collect()
+    bucket_counts = {r["_bucket"]: r["keys"] for r in per_bucket}
+    n_keys = sum(bucket_counts.values())
+    n_del = int(sum(r["dels"] for r in per_bucket))
+    # keys with a repeated LSN inside this batch: the (key, lsn) join-back
+    # would keep BOTH tying rows, silently writing duplicate key versions.
+    # Detected for free in the same stats collect.
+    has_lsn_ties = int(sum(r["dup_lsn_keys"] for r in per_bucket)) > 0
+
+    metrics = MergeMetrics(
+        batch_id=batch_id,
+        events_in=int(sum(r["events"] for r in per_bucket)),
+        keys_in_batch=n_keys,
+        upserts=n_keys - n_del,
+        deletes=n_del,
+        min_lsn=min((r["min_lsn"] for r in per_bucket), default=None),
+        max_lsn=max((r["max_lsn"] for r in per_bucket), default=None),
+        stats_sec=time.time() - t0,
+    )
+    prep = PreparedMerge(
+        batch_id=batch_id, new_files={}, metrics=metrics, evolved=evolved,
+        num_buckets=snap.num_buckets, bucket_cols=_bucket_cols(snap),
+        key_cols=tuple(key_cols), mode=mode, base_version=snap.version,
+    )
+    if n_keys == 0:
+        metrics.duration_sec = time.time() - t0
+        return prep  # nothing to merge: a fence-advance-only commit
+
+    affected = sorted(bucket_counts)
+    bcast = (lambda df: F.broadcast(df)) if n_keys <= broadcast_key_limit else (lambda df: df)
+    # Affected buckets with no current files (fresh table / untouched key
+    # space) need none of the current-vs-batch machinery — and the
+    # broadcast builds it would trigger are pure waste on initial load.
+    # MOR never reads current state: read-time LWW resolves it.
+    has_current = (not is_mor) and any(snap.files.get(b) for b in affected)
+    # Small-state byte gate (see COW_CONSOLIDATE_BYTES), over the sizes
+    # recorded at commit: decides both the consolidating write below and
+    # the fused small-merge path. A file with no recorded size (written
+    # before sizes were recorded) counts as over the gate.
+    sizes = [snap.file_bytes.get(f) for b in affected for f in snap.files.get(b, [])]
+    consolidate = has_current and None not in sizes and sum(sizes) <= COW_CONSOLIDATE_BYTES
+
+    # -- Fused small-merge fast path. The two-phase shape exists so wide
+    # rows never shuffle, but it costs three broadcast builds and two
+    # batch passes per commit — pure serial floor when the affected state
+    # is a few MB. Below the byte gate the whole LWW collapses into ONE
+    # aggregate over (current ∪ batch): max of struct(lsn, is_current,
+    # payload) per key. Tie semantics are IDENTICAL to the two-phase path:
+    # an equal-LSN tie between batch and stored row keeps the stored row
+    # (is_current=1 outranks 0 — the cur_lsn >= new_lsn rule), and batches
+    # carrying internal duplicate-LSN keys (detected free in phase 1) take
+    # the two-phase path so the struct-max payload tiebreak stays
+    # byte-for-byte the documented one. Gated off for changelog commits
+    # (they need the winners frame as a sidecar) and winner_stages
+    # (enrichment must see winning batch rows only).
+    fused = (
+        consolidate
+        and not changelog
+        and not winner_stages
+        and not (strict_lww_ties or has_lsn_ties)
+    )
+    persisted = []
+    try:
+        survivors = None
+        if fused:
+            payload = [c for c in evolved.fieldNames() if c not in key_cols and c != "lsn"]
+            current = _align(table.read_buckets(spark, affected, snap), evolved)
+            rows = _align(batch.withColumn(DELETED_COL, F.col("op") == F.lit("D")), evolved)
+            union = (
+                current.withColumn("_is_cur", F.lit(1))
+                .unionByName(rows.withColumn("_is_cur", F.lit(0)))
+                .select(*key_cols, "lsn", "_is_cur", *payload)
+            )
+            winners = dedup_last_writer(union, key_cols)
+        else:
+            # Small CoW batches are re-read by the winning-key aggregate
+            # and the winner join-back: cache them once instead of
+            # re-running the batch lineage per pass (see
+            # BATCH_PERSIST_ROWS; CoW-only).
+            if has_current and metrics.events_in <= BATCH_PERSIST_ROWS:
+                batch = batch.persist()
+                persisted.append(batch)
+            won = wk.select(*key_cols, "lsn")
+            cur_beats = None
+            if has_current:
+                wk = wk.persist()
+                persisted.append(wk)
+                current = _align(table.read_buckets(spark, affected, snap), evolved)
+                # -- LWW vs current state: a key's batch version only
+                # applies if its LSN beats the stored LSN (ties keep the
+                # stored row, so an already-applied writer is never
+                # re-applied). Out-of-order and late batches are therefore
+                # safe. Column pruning makes this a (key, lsn)-only scan of
+                # the affected buckets; the broadcast join means the bucket
+                # data itself never shuffles.
+                cur_beats = (
+                    current.select(*key_cols, F.col("lsn").alias("_cur_lsn"))
+                    .join(bcast(wk.select(*key_cols, F.col("lsn").alias("_new_lsn"))), key_cols, "inner")
+                    .filter(F.col("_cur_lsn") >= F.col("_new_lsn"))
+                    .select(*key_cols)
+                )
+                won = wk.join(cur_beats, key_cols, "left_anti").select(*key_cols, "lsn").persist()
+                persisted.append(won)
+                # -- survivors: current rows whose key the batch did not
+                # win. Broadcast LEFT ANTI = map-side filter; file-aligned
+                # partitions are kept on write (repartition=False) so the
+                # table state is never shuffled. Only the winner set
+                # repartitions to its target buckets.
+                survivors = current.join(bcast(won.select(*key_cols)), key_cols, "left_anti")
+            # -- Phase 2: winning payload rows. Insert-heavy fast path:
+            # when every key appears once (initial load / insert-only
+            # stream), the batch IS the winner set minus keys the stored
+            # state beats — no join-back at all. Otherwise broadcast
+            # join-back: winners stream straight from the batch scan, no
+            # wide shuffle.
+            if n_keys == metrics.events_in:
+                winners = batch if cur_beats is None else batch.join(bcast(cur_beats), key_cols, "left_anti")
+            elif is_mor and n_keys > broadcast_key_limit:
+                # Winner set too large to broadcast: the (key, lsn)
+                # join-back degenerates to a sort-merge join that shuffles
+                # the FULL batch payload anyway — on top of the narrow
+                # aggregate's own shuffle and both sort passes. One
+                # struct-max aggregate moves the payload once (with
+                # map-side partial combine) and its result IS the
+                # documented duplicate-LSN tiebreak, so the tie path needs
+                # no separate handling. (The two-phase shape stays the
+                # design for the broadcastable common case — there the
+                # payload never shuffles at all.)
+                winners = dedup_last_writer(batch, key_cols)
+            else:
+                winners = batch.join(bcast(won), [*key_cols, "lsn"], "inner")
+                if strict_lww_ties or has_lsn_ties:
+                    winners = dedup_last_writer(winners, key_cols)
+            winners = _winner_staged(winners).withColumn(DELETED_COL, F.col("op") == F.lit("D"))
+        winners = _align(winners, evolved)
+
+        # Change-data-feed sidecar (CoW only): persist the winners ONCE,
+        # then read them back as the source for the bucket write below —
+        # the winner plan executes a single time, and the sidecar paths
+        # ride the commit summary so read_changes can serve row-level
+        # changes from this rewrite commit. Orphaned sidecars (a losing
+        # commit race) are unreferenced and reclaimed by vacuum.
+        if changelog and not is_mor:
+            chdir = os.path.join(table.data_dir, f"chlog{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}")
+            winners.write.parquet(chdir)
+            prep.changelog = sorted(
+                os.path.relpath(p, table.path)
+                for p in glob.glob(os.path.join(chdir, "*.parquet"))
+            )
+            if prep.changelog:
+                winners = spark.read.schema(evolved).parquet(
+                    *[os.path.join(table.path, f) for f in prep.changelog]
+                )
+
+        # One write job. Default shape: the survivors branch (if any)
+        # streams file-aligned (no shuffle), only the winners branch
+        # repartitions. Small-state exception: file-aligned survivor
+        # writes emit one file per (scan task, bucket), so each CoW batch
+        # fragments its buckets further and every later merge pays the
+        # growing file count in driver plan-building, footer stats and
+        # scan setup. When the affected buckets hold only a few MB, a
+        # shuffle of those bytes is far cheaper than the fragmentation —
+        # so below the byte gate survivors ride the winners' exchange and
+        # every rewritten bucket compacts to ONE file per commit. Above
+        # it, the wide-row rule stands: table state never shuffles.
+        bexpr = table.bucket_expr(spec)
+        if consolidate and survivors is not None:
+            combined = (
+                survivors.unionByName(winners)
+                .withColumn("_bucket", bexpr)
+                .repartition("_bucket")
+            )
+        else:
+            combined = winners.withColumn("_bucket", bexpr).repartition("_bucket")
+            if survivors is not None:
+                combined = survivors.withColumn("_bucket", bexpr).unionByName(combined)
+        name = f"mor{batch_id:08d}" if speculative else f"snap{snap.version + 1:08d}"
+        t_w = time.time()
+        prep.new_files = table.write_bucket_files(
+            combined, spec, f"{name}-{uuid.uuid4().hex[:8]}", repartition=False
+        )
+        metrics.write_sec = time.time() - t_w
+    finally:
+        for df in persisted:
+            df.unpersist()
+    prep.replaced = frozenset() if is_mor else frozenset(affected)
+    metrics.buckets_touched = len(affected)
+    metrics.bucket_rows = {str(b): int(c) for b, c in bucket_counts.items()}
+    metrics.duration_sec = time.time() - t0
+    return prep
+
+
+def _publish(table: LakeTable, prep: PreparedMerge, expected_version: int, fence_prop: str) -> MergeMetrics:
+    """Commit a prepared merge as the snapshot after ``expected_version``:
+    fence and delta flag, the summary (the only place one is built, so
+    every merge commit — fence-only ones included — records the same
+    keys), replaced buckets. On CommitConflict: if the winning writer
+    applied THIS batch (duplicate delivery racing us), the fence makes our
+    work a no-op and the merge reports a skip — exactly-once holds.
+    Anything else re-raises for the caller to retry against fresh state
+    (our files stay orphaned until vacuum; they were never referenced)."""
+    t0 = time.time()
+    props = {fence_prop: str(prep.batch_id)}
+    if prep.mode == "mor" and prep.new_files:
+        props[DELTA_PROP] = "true"
+    summary = {"operation": "merge", "mode": prep.mode, **prep.metrics.to_dict()}
+    if prep.changelog is not None:
+        summary["changelog"] = prep.changelog
+    try:
+        new_snap = table.commit(
+            prep.new_files,
+            replaced_buckets=prep.replaced,
+            schema=prep.evolved,
+            properties=props,
+            summary=summary,
+            expected_version=expected_version,
+        )
+    except CommitConflict:
+        cur = table.snapshot()
+        if _fence(cur, fence_prop) >= prep.batch_id:
+            return MergeMetrics(batch_id=prep.batch_id, skipped=True, snapshot_version=cur.version)
+        raise
+    prep.metrics.snapshot_version = new_snap.version
+    prep.metrics.duration_sec += time.time() - t0
+    return prep.metrics
 
 
 def prepare_mor_merge(
@@ -309,97 +660,21 @@ def prepare_mor_merge(
     strict_lww_ties: bool = False,
     fence_prop: str = FENCE_PROP,
 ) -> PreparedMerge | None:
-    """Phases 1+2 and the bucket-file WRITE of a MOR merge, run against an
-    ASSUMED snapshot with the commit deferred (guide §2.6: consecutive MOR
+    """``_prepare`` of a MOR merge against an ASSUMED snapshot, the commit
+    deferred to ``commit_prepared_merge`` (guide §2.6: consecutive MOR
     merges are independent except the fence — batch i+1's write job can
     back-fill executors while batch i's write drains, and the commits stay
     strictly ordered on the caller's thread). MOR never reads table state,
-    so the only snapshot inputs are the bucket spec and the schema; both
-    are re-validated by ``commit_prepared_merge`` before publishing.
+    so the only snapshot inputs are the bucket spec and the schema.
 
-    Returns None when the batch needs the classic serial path (assumed
-    fence already past it, or in-flight schema evolution — evolution also
-    rewrites assumptions for every later in-flight prepare, so the caller
-    must refresh ``assumed`` after any fallback). Winner semantics are
-    byte-identical to ``_merge_apply_once``'s MOR branch: same insert-only
-    fast path, same single-phase gate above the broadcast limit, same
-    duplicate-LSN struct-max tiebreak."""
-    t0 = time.time()
-    if batch_id <= int(assumed.properties.get(fence_prop, "-1")):
-        return None  # fence already past under the assumption — classic path re-checks
-
-    for stage in stages:
-        batch = stage(batch)
-
-    def _winner_staged(df: DataFrame) -> DataFrame:
-        for stage in winner_stages:
-            df = stage(df)
-        return df
-
-    staged_empty = _winner_staged(batch.limit(0))
-    if any(c.lower() == "_bucket" for c in staged_empty.columns):
-        raise SchemaError(
-            "'_bucket' is a reserved lake column (the merge overwrites it "
-            "with the hash-bucket id); rename it upstream"
-        )
-    payload_fields = [f for f in staged_empty.schema.fields if f.name not in CONTROL_COLS]
-    incoming = T.StructType(
-        payload_fields
-        + [T.StructField("lsn", T.LongType(), True), T.StructField(DELETED_COL, T.BooleanType(), True)]
+    Returns None when the batch needs the serial ``merge_apply`` (assumed
+    fence already past it, or in-flight schema evolution; the caller must
+    refresh ``assumed`` after such a fallback)."""
+    return _prepare(
+        spark, table, batch, batch_id, assumed, stages=stages, winner_stages=winner_stages,
+        broadcast_key_limit=broadcast_key_limit, strict_lww_ties=strict_lww_ties,
+        fence_prop=fence_prop, mode="mor", speculative=True,
     )
-    evolved = merge_schemas(assumed.schema, incoming)
-    if evolved != assumed.schema:
-        return None  # schema evolution: the classic path owns widen/rewrite
-
-    key_cols = assumed.key_cols
-    wk = _winning_keys(batch, key_cols)
-    per_bucket = _per_bucket_stats(wk, table, assumed).collect()
-    bucket_counts = {r["_bucket"]: r["keys"] for r in per_bucket}
-    n_keys = sum(bucket_counts.values())
-    n_del = int(sum(r["dels"] for r in per_bucket))
-    has_lsn_ties = int(sum(r["dup_lsn_keys"] for r in per_bucket)) > 0
-
-    metrics = MergeMetrics(
-        batch_id=batch_id,
-        events_in=int(sum(r["events"] for r in per_bucket)),
-        keys_in_batch=n_keys,
-        upserts=n_keys - n_del,
-        deletes=n_del,
-        min_lsn=min((r["min_lsn"] for r in per_bucket), default=None),
-        max_lsn=max((r["max_lsn"] for r in per_bucket), default=None),
-        stats_sec=time.time() - t0,
-    )
-    base = PreparedMerge(
-        batch_id=batch_id, new_files={}, metrics=metrics, evolved=evolved,
-        num_buckets=assumed.num_buckets,
-        bucket_cols=tuple(assumed.bucket_cols) if assumed.bucket_cols else None,
-        key_cols=tuple(key_cols),
-    )
-    if n_keys == 0:
-        metrics.duration_sec = time.time() - t0
-        return base  # fence-advance-only commit
-
-    bcast = (lambda df: F.broadcast(df)) if n_keys <= broadcast_key_limit else (lambda df: df)
-    if n_keys == metrics.events_in:
-        winners = batch
-    elif n_keys > broadcast_key_limit and os.environ.get("SPARK_GRAFT_MOR_SINGLE_PHASE", "1") != "0":
-        winners = dedup_last_writer(batch, key_cols)
-    else:
-        winners = batch.join(bcast(wk.select(*key_cols, "lsn")), [*key_cols, "lsn"], "inner")
-        if strict_lww_ties or has_lsn_ties:
-            winners = dedup_last_writer(winners, key_cols)
-    winners = _winner_staged(winners)
-    winners = _align(winners.withColumn(DELETED_COL, F.col("op") == F.lit("D")), evolved)
-
-    combined = winners.withColumn("_bucket", table.bucket_expr(assumed)).repartition("_bucket")
-    tag = f"mor{batch_id:08d}-{uuid.uuid4().hex[:8]}"
-    t_w = time.time()
-    base.new_files = table.write_bucket_files(combined, assumed, tag, repartition=False)
-    metrics.write_sec = time.time() - t_w
-    metrics.buckets_touched = len(bucket_counts)
-    metrics.bucket_rows = {str(b): int(c) for b, c in bucket_counts.items()}
-    metrics.duration_sec = time.time() - t0
-    return base
 
 
 def commit_prepared_merge(
@@ -408,40 +683,27 @@ def commit_prepared_merge(
     fence_prop: str = FENCE_PROP,
     max_retries: int = 5,
 ) -> MergeMetrics | None:
-    """CAS-publish a prepared MOR merge. Re-validates every assumption
-    against the LIVE snapshot first: fence (duplicate delivery -> skip,
-    exactly-once holds), schema, bucket spec. Returns None when the
-    assumptions no longer hold — the caller re-runs the classic merge and
-    the prepared files stay orphaned until vacuum (they were never
-    referenced). Retries the CAS when an unrelated commit (compaction, a
-    concurrent stream) races us but the assumptions still validate."""
+    """``_publish`` a prepared MOR merge after re-validating its
+    assumptions against the LIVE snapshot: fence (duplicate delivery ->
+    skip, exactly-once holds), schema, bucket spec. Returns None when the
+    assumptions no longer hold — the caller re-runs the batch through
+    ``merge_apply``. Retries the CAS when an unrelated commit (compaction,
+    a concurrent stream) races us but the assumptions still validate."""
     for _ in range(max_retries):
         cur = table.snapshot()
-        if int(cur.properties.get(fence_prop, "-1")) >= prep.batch_id:
+        if _fence(cur, fence_prop) >= prep.batch_id:
             return MergeMetrics(batch_id=prep.batch_id, skipped=True, snapshot_version=cur.version)
         if (
             cur.schema != prep.evolved
             or cur.num_buckets != prep.num_buckets
             or tuple(cur.key_cols) != prep.key_cols
-            or (tuple(cur.bucket_cols) if cur.bucket_cols else None) != prep.bucket_cols
+            or _bucket_cols(cur) != prep.bucket_cols
         ):
             return None
-        props = {fence_prop: str(prep.batch_id)}
-        if prep.new_files:
-            props[DELTA_PROP] = "true"
         try:
-            new_snap = table.commit(
-                prep.new_files,
-                replaced_buckets=set(),
-                schema=prep.evolved,
-                properties=props,
-                summary={"operation": "merge", "mode": "mor", **prep.metrics.to_dict()},
-                expected_version=cur.version,
-            )
+            return _publish(table, prep, cur.version, fence_prop)
         except CommitConflict:
             continue
-        prep.metrics.snapshot_version = new_snap.version
-        return prep.metrics
     return None
 
 
@@ -460,53 +722,8 @@ def merge_apply(
     precomputed: PrecomputedStats | None = None,
     changelog: bool = False,
 ) -> MergeMetrics:
-    """Apply one microbatch of change events to ``table``.
-
-    ``changelog=True`` makes a COPY-ON-WRITE commit change-readable
-    (``cdc.changes.read_changes``): the winner frame is persisted once as
-    a per-commit sidecar and then *reused* as the winners source for the
-    bucket write, so the winner plan still executes exactly once — the
-    cost is one extra O(batch) write, never a re-derivation. MOR commits
-    ignore the flag: their delta files already ARE the changelog.
-
-    ``conflict_retries``: when a CONCURRENT writer (another stream, a
-    maintenance compact/rebucket) wins the version race, re-run the whole
-    merge against the fresh snapshot up to N times. Safe by construction:
-    the fence check runs first on every attempt (a duplicate-delivery race
-    already returns a skip), and a losing attempt's files were never
-    referenced (vacuum reclaims them).
-    """
-    attempt = 0
-    while True:
-        try:
-            return _merge_apply_once(
-                spark, table, batch, batch_id, stages=stages, fence_prop=fence_prop,
-                broadcast_key_limit=broadcast_key_limit, strict_lww_ties=strict_lww_ties,
-                winner_stages=winner_stages, mode=mode, precomputed=precomputed,
-                changelog=changelog,
-            )
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
-            precomputed = None  # stale after a concurrent commit
-
-
-def _merge_apply_once(
-    spark: SparkSession,
-    table: LakeTable,
-    batch: DataFrame,
-    batch_id: int,
-    stages: Iterable[TransformStage] = (),
-    fence_prop: str = FENCE_PROP,
-    broadcast_key_limit: int = 500_000,
-    strict_lww_ties: bool = False,
-    winner_stages: Iterable[TransformStage] = (),
-    mode: str = "cow",
-    precomputed: PrecomputedStats | None = None,
-    changelog: bool = False,
-) -> MergeMetrics:
-    """One merge attempt (see ``merge_apply``).
+    """Apply one microbatch of change events to ``table``: ``_prepare``
+    against the live snapshot, then ``_publish`` pinned to its version.
 
     ``mode``:
 
@@ -544,339 +761,33 @@ def _merge_apply_once(
     aggregate and resolved with a deterministic struct-max tiebreak over
     the (small) winner set. ``strict_lww_ties=True`` forces the tiebreak
     unconditionally.
+
+    ``changelog=True`` makes a COPY-ON-WRITE commit change-readable
+    (``cdc.changes.read_changes``): the winner frame is persisted once as
+    a per-commit sidecar and then *reused* as the winners source for the
+    bucket write, so the winner plan still executes exactly once — the
+    cost is one extra O(batch) write, never a re-derivation. MOR commits
+    ignore the flag: their delta files already ARE the changelog.
+
+    ``conflict_retries``: when a CONCURRENT writer (another stream, a
+    maintenance compact/rebucket) wins the version race, re-run the whole
+    merge against the fresh snapshot up to N times. Safe by construction:
+    the fence check runs first on every attempt (a duplicate-delivery race
+    already returns a skip), and a losing attempt's files were never
+    referenced (vacuum reclaims them).
     """
-    t0 = time.time()
-    snap = table.snapshot()
-    last = int(snap.properties.get(fence_prop, "-1"))
-    if batch_id <= last:
-        # Fence: this batch already committed — idempotent replay no-op.
-        return MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=snap.version)
-
-    for stage in stages:
-        batch = stage(batch)
-
-    def _winner_staged(df: DataFrame) -> DataFrame:
-        for stage in winner_stages:
-            df = stage(df)
-        return df
-
-    # schema evolution must account for winner-stage output columns too:
-    # probe them against an empty frame (no data moves, plan-only)
-    staged_empty = _winner_staged(batch.limit(0))
-
-    key_cols = snap.key_cols
-    if any(c.lower() == "_bucket" for c in staged_empty.columns):
-        # the write path overwrites _bucket with the hash-bucket id and the
-        # partitioned write then strips it — a data column named _bucket
-        # would be silently destroyed, so refuse it loudly
-        raise SchemaError(
-            "'_bucket' is a reserved lake column (the merge overwrites it "
-            "with the hash-bucket id); rename it upstream"
-        )
-    # -- in-flight schema evolution -------------------------------------
-    payload_fields = [f for f in staged_empty.schema.fields if f.name not in CONTROL_COLS]
-    incoming = T.StructType(
-        payload_fields
-        + [T.StructField("lsn", T.LongType(), True), T.StructField(DELETED_COL, T.BooleanType(), True)]
-    )
-    evolved = merge_schemas(snap.schema, incoming)
-    if snap.all_files and _unsupported_upcast_paths(snap.schema, evolved):
-        # widening beyond what the parquet reader upcasts (long->double):
-        # rewrite live files under the evolved schema first, then merge
-        # against the fresh snapshot
-        snap = _widen_rewrite(spark, table, snap, evolved)
-    snap_for_bucket = Snapshot(**{**snap.__dict__, "schema": evolved})
-
-    # -- Phase 1: narrow winning-key aggregate. Only (key, lsn, op) leave
-    # the scan (parquet column pruning), partial combine collapses hot
-    # keys map-side, and the shuffle carries no payload bytes. Kept lazy:
-    # the stats job pipelines through it without materializing the keyset;
-    # it is persisted below ONLY if the merge actually reuses it (current
-    # state exists), since on an initial load pinning millions of winner
-    # keys in the memory store is pure churn.
-    wk = _winning_keys(batch, key_cols)
-    persisted = []
-    try:
-        # One collect serves both lineage stats and the affected-bucket
-        # list: per-bucket partials (<= num_buckets rows) combined driver
-        # side. Fewer jobs per batch = less serial floor per microbatch.
-        # A valid PrecomputedStats (same bucket function, same batch —
-        # see replay_events' stats-ahead pipelining) skips the collect
-        # entirely: its job already ran overlapped with the previous
-        # batch's write.
-        if (
-            precomputed is not None
-            and precomputed.batch_id == batch_id
-            and precomputed.key_cols == tuple(key_cols)
-            and precomputed.num_buckets == snap.num_buckets
-        ):
-            per_bucket = precomputed.rows
-        else:
-            per_bucket = _per_bucket_stats(wk, table, snap_for_bucket).collect()
-        bucket_counts = {r["_bucket"]: r["keys"] for r in per_bucket}
-        n_keys = sum(bucket_counts.values())
-        n_del = int(sum(r["dels"] for r in per_bucket))
-        # keys with a repeated LSN inside this batch: the (key, lsn) join-
-        # back would keep BOTH tying rows, silently writing duplicate key
-        # versions. Detected for free in the same stats collect; when
-        # present, the winner set (small) gets a deterministic struct-max
-        # tiebreak below.
-        has_lsn_ties = int(sum(r["dup_lsn_keys"] for r in per_bucket)) > 0
-
-        metrics = MergeMetrics(
-            batch_id=batch_id,
-            events_in=int(sum(r["events"] for r in per_bucket)),
-            keys_in_batch=n_keys,
-            upserts=n_keys - n_del,
-            deletes=n_del,
-            min_lsn=min((r["min_lsn"] for r in per_bucket), default=None),
-            max_lsn=max((r["max_lsn"] for r in per_bucket), default=None),
-            stats_sec=time.time() - t0,
-        )
-
-        if n_keys == 0:
-            # Nothing to merge, still advance the fence atomically.
-            new_snap = table.commit({}, set(), schema=evolved,
-                                    properties={fence_prop: str(batch_id)},
-                                    summary={"operation": "merge", **metrics.to_dict()},
-                                    expected_version=snap.version)
-            metrics.snapshot_version = new_snap.version
-            metrics.duration_sec = time.time() - t0
-            return metrics
-
-        affected = sorted(bucket_counts)
-
-        bcast = (lambda df: F.broadcast(df)) if n_keys <= broadcast_key_limit else (lambda df: df)
-        is_mor = mode == "mor"
-        # Affected buckets with no current files (fresh table / untouched
-        # key space) need none of the current-vs-batch machinery — and the
-        # broadcast builds it would trigger are pure waste on initial load.
-        # MOR never reads current state: read-time LWW resolves it.
-        has_current = (not is_mor) and any(snap.files.get(b) for b in affected)
-
-        # Small-state byte gate (see _cow_consolidate_bytes): decides both
-        # the consolidating write below and the fused small-merge path.
-        consolidate = False
-        if has_current:
-            try:
-                affected_bytes = sum(
-                    os.path.getsize(os.path.join(table.path, f))
-                    for b in affected
-                    for f in snap.files.get(b, [])
-                )
-                consolidate = affected_bytes <= _cow_consolidate_bytes()
-            except OSError:
-                consolidate = False  # files not locally statable: keep no-shuffle path
-
-        # -- Fused small-merge fast path. The two-phase shape exists so
-        # wide rows never shuffle, but it costs three broadcast builds and
-        # two batch passes per commit — pure serial floor when the
-        # affected state is a few MB. Below the byte gate the whole LWW
-        # collapses into ONE aggregate over (current ∪ batch): max of
-        # struct(lsn, is_current, payload) per key. Tie semantics are
-        # IDENTICAL to the two-phase path: an equal-LSN tie between batch
-        # and stored row keeps the stored row (is_current=1 outranks 0 —
-        # the cur_lsn >= new_lsn rule), and batches carrying internal
-        # duplicate-LSN keys (detected free in phase 1) fall back to the
-        # classic path so the struct-max payload tiebreak stays byte-for-
-        # byte the documented one. Gated off for changelog commits (they
-        # need the winners frame as a sidecar) and winner_stages
-        # (enrichment must see winning batch rows only).
-        fused = (
-            has_current
-            and consolidate
-            and not changelog
-            and not tuple(winner_stages)
-            and not (strict_lww_ties or has_lsn_ties)
-        )
-        if fused:
-            current = _align(table.read_buckets(spark, affected, snap), evolved)
-            batch_al = _align(
-                batch.withColumn(DELETED_COL, F.col("op") == F.lit("D")), evolved
-            )
-            payload = [c for c in evolved.fieldNames() if c not in key_cols and c != "lsn"]
-            packed = F.struct(
-                F.col("lsn"), F.col("_is_cur"), *[F.col(c) for c in payload]
-            )
-            union = current.withColumn("_is_cur", F.lit(1)).unionByName(
-                batch_al.withColumn("_is_cur", F.lit(0))
-            )
-            won = union.groupBy(*key_cols).agg(F.max(packed).alias("_w"))
-            state = won.select(
-                *key_cols,
-                F.col("_w.lsn").alias("lsn"),
-                *[F.col(f"_w.{c}").alias(c) for c in payload],
-            )
-            bexpr = table.bucket_expr(snap_for_bucket)
-            combined = _align(state, evolved).withColumn("_bucket", bexpr).repartition("_bucket")
-            tag = f"snap{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
-            t_w = time.time()
-            new_files = table.write_bucket_files(combined, snap_for_bucket, tag, repartition=False)
-            metrics.write_sec = time.time() - t_w
-            try:
-                new_snap = table.commit(
-                    new_files,
-                    replaced_buckets=set(affected),
-                    schema=evolved,
-                    properties={fence_prop: str(batch_id)},
-                    summary={"operation": "merge", "mode": mode, **metrics.to_dict()},
-                    expected_version=snap.version,
-                )
-            except CommitConflict:
-                cur = table.snapshot()
-                if int(cur.properties.get(fence_prop, "-1")) >= batch_id:
-                    return MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=cur.version)
-                raise
-            metrics.buckets_touched = len(affected)
-            metrics.bucket_rows = {str(b): int(c) for b, c in bucket_counts.items()}
-            metrics.snapshot_version = new_snap.version
-            metrics.duration_sec = time.time() - t0
-            return metrics
-
-        # Small CoW batches are re-read by the winning-key aggregate and
-        # the winner join-back: cache them once instead of re-running the
-        # batch lineage per pass. CoW-only and row-gated: persisting the
-        # bench's 1M-event MOR batches measured a 2.2x replay REGRESSION
-        # (338 s vs 153 s at 20M events) — memory-store materialization
-        # under 32 concurrent tasks costs far more than the pruned
-        # binlog re-scan it saves.
-        if has_current and metrics.events_in <= _batch_persist_rows():
-            batch = batch.persist()
-            persisted.append(batch)
-
-        cur_beats = None
-        batch_won = wk.select(*key_cols, "lsn")
-        survivors = None
-        if has_current:
-            wk = wk.persist()
-            persisted.append(wk)
-            current = _align(table.read_buckets(spark, affected, snap), evolved)
-            # -- LWW vs current state: a key's batch version only applies
-            # if its LSN beats the stored LSN (ties keep the stored row, so
-            # an already-applied writer is never re-applied). Out-of-order
-            # and late batches are therefore safe. Column pruning makes
-            # this a (key, lsn)-only scan of the affected buckets; the
-            # broadcast join means the bucket data itself never shuffles.
-            cur_beats = (
-                current.select(*key_cols, F.col("lsn").alias("_cur_lsn"))
-                .join(bcast(wk.select(*key_cols, F.col("lsn").alias("_new_lsn"))), key_cols, "inner")
-                .filter(F.col("_cur_lsn") >= F.col("_new_lsn"))
-                .select(*key_cols)
-            )
-            batch_won = wk.join(cur_beats, key_cols, "left_anti").select(*key_cols, "lsn").persist()
-            persisted.append(batch_won)
-            # -- survivors: current rows whose key the batch did not win.
-            # Broadcast LEFT ANTI = map-side filter; file-aligned
-            # partitions are kept on write (repartition=False) so the
-            # table state is never shuffled. Only the winner set
-            # repartitions to its target buckets.
-            survivors = current.join(bcast(batch_won.select(*key_cols)), key_cols, "left_anti")
-
-        # -- Phase 2: winning payload rows. Insert-heavy fast path: when
-        # every key appears once (initial load / insert-only stream), the
-        # batch IS the winner set minus keys the stored state beats — no
-        # join-back at all. Otherwise broadcast join-back: winners stream
-        # straight from the batch scan, no wide shuffle.
-        if n_keys == metrics.events_in:
-            winners = batch if cur_beats is None else batch.join(bcast(cur_beats), key_cols, "left_anti")
-        elif (
-            is_mor
-            and n_keys > broadcast_key_limit
-            and os.environ.get("SPARK_GRAFT_MOR_SINGLE_PHASE", "1") != "0"
-        ):
-            # Winner set too large to broadcast: the (key, lsn) join-back
-            # degenerates to a sort-merge join that shuffles the FULL
-            # batch payload anyway — on top of the narrow aggregate's own
-            # shuffle and both sort passes. One struct-max aggregate
-            # moves the payload once (with map-side partial combine) and
-            # its result IS the documented duplicate-LSN tiebreak, so the
-            # tie path needs no separate handling. (The two-phase shape
-            # stays the design for the broadcastable common case — there
-            # the payload never shuffles at all.)
-            winners = dedup_last_writer(batch, key_cols)
-        else:
-            winners = batch.join(bcast(batch_won), [*key_cols, "lsn"], "inner")
-            if strict_lww_ties or has_lsn_ties:
-                winners = dedup_last_writer(winners, key_cols)
-        winners = _winner_staged(winners)
-        winners = _align(winners.withColumn(DELETED_COL, F.col("op") == F.lit("D")), evolved)
-
-        # Change-data-feed sidecar (CoW only): persist the winners ONCE,
-        # then read them back as the source for the bucket write below —
-        # the winner plan executes a single time, and the sidecar paths
-        # ride the commit summary so read_changes can serve row-level
-        # changes from this rewrite commit. Orphaned sidecars (a losing
-        # commit race) are unreferenced and reclaimed by vacuum.
-        chlog_files: list[str] | None = None
-        if changelog and not is_mor:
-            chdir = os.path.join(table.data_dir, f"chlog{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}")
-            winners.write.parquet(chdir)
-            chlog_files = sorted(
-                os.path.relpath(p, table.path)
-                for p in glob.glob(os.path.join(chdir, "*.parquet"))
-            )
-            if chlog_files:
-                winners = spark.read.schema(evolved).parquet(
-                    *[os.path.join(table.path, f) for f in chlog_files]
-                )
-
-        # One write job. Default shape: the survivors branch (if any)
-        # streams file-aligned (no shuffle), only the winners branch
-        # repartitions. Small-state exception: file-aligned survivor
-        # writes emit one file per (scan task, bucket), so each CoW batch
-        # fragments its buckets further and every later merge pays the
-        # growing file count in driver plan-building, footer stats and
-        # scan setup. When the affected buckets hold only a few MB, a
-        # shuffle of those bytes is far cheaper than the fragmentation —
-        # so below the byte gate survivors ride the winners' exchange and
-        # every rewritten bucket compacts to ONE file per commit. Above
-        # it, the wide-row rule stands: table state never shuffles.
-        bexpr = table.bucket_expr(snap_for_bucket)
-        if consolidate and survivors is not None:
-            combined = (
-                survivors.unionByName(winners)
-                .withColumn("_bucket", bexpr)
-                .repartition("_bucket")
-            )
-        else:
-            combined = winners.withColumn("_bucket", bexpr).repartition("_bucket")
-            if survivors is not None:
-                combined = survivors.withColumn("_bucket", bexpr).unionByName(combined)
-        tag = f"snap{snap.version + 1:08d}-{uuid.uuid4().hex[:8]}"
-        t_w = time.time()
-        new_files = table.write_bucket_files(combined, snap_for_bucket, tag, repartition=False)
-        metrics.write_sec = time.time() - t_w
-
-        props = {fence_prop: str(batch_id)}
-        if is_mor:
-            props[DELTA_PROP] = "true"
-        summary = {"operation": "merge", "mode": mode, **metrics.to_dict()}
-        if chlog_files is not None:
-            summary["changelog"] = chlog_files
+    for attempt in range(conflict_retries + 1):
+        snap = table.snapshot()
         try:
-            new_snap = table.commit(
-                new_files,
-                replaced_buckets=set() if is_mor else set(affected),
-                schema=evolved,
-                properties=props,
-                summary=summary,
-                expected_version=snap.version,
+            prep = _prepare(
+                spark, table, batch, batch_id, snap, stages=stages, winner_stages=winner_stages,
+                broadcast_key_limit=broadcast_key_limit, strict_lww_ties=strict_lww_ties,
+                fence_prop=fence_prop, mode=mode, precomputed=precomputed, changelog=changelog,
             )
+            if prep is None:
+                return MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=snap.version)
+            return _publish(table, prep, prep.base_version, fence_prop)
         except CommitConflict:
-            # A concurrent writer committed first. If it applied THIS batch
-            # (duplicate delivery racing us), the fence makes our work a
-            # no-op — exactly-once holds. Anything else must be retried by
-            # the caller against fresh state (our files stay orphaned until
-            # vacuum; they were never referenced).
-            cur = table.snapshot()
-            if int(cur.properties.get(fence_prop, "-1")) >= batch_id:
-                return MergeMetrics(batch_id=batch_id, skipped=True, snapshot_version=cur.version)
-            raise
-        metrics.buckets_touched = len(affected)
-        metrics.bucket_rows = {str(b): int(c) for b, c in bucket_counts.items()}
-        metrics.snapshot_version = new_snap.version
-        metrics.duration_sec = time.time() - t0
-        return metrics
-    finally:
-        for df in persisted:
-            df.unpersist()
+            if attempt >= conflict_retries:
+                raise
+            precomputed = None  # stale after a concurrent commit

@@ -1,23 +1,39 @@
-"""Batch replayer: drive merge_apply over an ordered change stream.
+"""Batch replayer: drive the merge pipeline over an ordered change stream.
 
 A binlog/WAL materialized as a DataFrame with a ``batch_id`` column is
 replayed one microbatch at a time; every batch commit is fenced, so a
 replay interrupted at batch k resumes from k+1 with no duplicates and no
 gaps (exactly-once). The streaming face of the same loop lives in
 ``docetl_spark.streaming.stream`` (Structured Streaming foreachBatch).
+
+``replay_events`` is ONE ordered loop over the batches with a per-mode
+look-ahead running on helper threads while the current batch commits:
+
+* MOR — a full ``prepare_mor_merge`` (stats + winners + bucket-file
+  write) for the current batch and the next one (depth
+  ``MOR_PIPELINE_DEPTH``); the loop publishes them in batch order with
+  ``commit_prepared_merge``.
+* CoW — a ``compute_batch_stats`` prefetch for the next batch (depth 1)
+  that ``merge_apply`` reuses when its bucket fingerprint still matches.
+
+A look-ahead that raises, returns None or fails validation is simply not
+used: the batch goes through the serial ``merge_apply``. The merge entry
+points are looked up on ``docetl_spark.cdc.merge`` at call time.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from docetl_spark.cdc.merge import (
+from docetl_spark.cdc import merge as _merge
+from docetl_spark.cdc.merge import (  # merge_apply stays importable here: perfbench/trace.py patches it
     DELETED_COL,
     DELTA_PROP,
     FENCE_PROP,
@@ -27,6 +43,11 @@ from docetl_spark.cdc.merge import (
     merge_apply,
 )
 from docetl_spark.lake.table import LakeTable
+
+# MOR prepares in flight: one in-flight write + one back-filling; deeper
+# pipelines add concurrent shuffle/write pressure on shared disks (depth 3
+# measured no better) — measure before raising.
+MOR_PIPELINE_DEPTH = 2
 
 
 def create_cdc_table(
@@ -222,7 +243,8 @@ def replay_events(
     Lineage granularity becomes per-group (one MergeMetrics; min/max LSN
     and event counts still exact).
     """
-    last_applied = int(table.snapshot().properties.get(FENCE_PROP, "-1"))
+    snap = table.snapshot()
+    last_applied = int(snap.properties.get(FENCE_PROP, "-1"))
     if batch_ids is None:
         batch_ids = [
             r[0]
@@ -253,135 +275,54 @@ def replay_events(
             return events.filter(F.col(batch_col) == group[0])
         return events.filter(F.col(batch_col).isin([int(b) for b in group]))
 
-    return _replay_groups(
-        spark, table, groups, batch_df, stages, winner_stages,
-        metrics_path, compact_every, changelog, mode,
-    )
+    # Look-ahead window: groups [i + first, i + first + depth) are in
+    # flight while group i commits. A MOR merge never reads table state,
+    # so its whole prepare runs ahead (from the current batch on) and only
+    # the fenced commits stay ordered on this thread — exactly-once, fence
+    # monotonicity and the change feed's per-commit deltas are those of
+    # serial replay. CoW reads the previous commit's state, so only the
+    # next batch's stats job (which reads just its own events) runs ahead.
+    is_mor = mode == "mor"
+    first, depth = (0, MOR_PIPELINE_DEPTH) if is_mor else (1, 1)
+    assumed = snap  # MOR prepares' snapshot; refreshed after a fallback
 
-
-def _replay_groups(
-    spark: SparkSession,
-    table: LakeTable,
-    groups: list[list[int]],
-    batch_df,
-    stages: Iterable[TransformStage],
-    winner_stages: Iterable[TransformStage],
-    metrics_path: str | None,
-    compact_every: int | None,
-    changelog: bool,
-    mode: str,
-) -> list[MergeMetrics]:
-    """Serial replay loop with stats-ahead pipelining: batch i+1's phase-1
-    stats job reads only its own events slice — never table state — so it
-    runs in a helper thread WHILE batch i's write job executes, hiding one
-    of the two serial jobs per micro-batch. merge_apply validates the
-    prefetch against its own snapshot (bucket fingerprint + batch id) and
-    silently recomputes if a compaction/rebucket invalidated it. MOR mode
-    upgrades to full write pipelining (_replay_mor_pipelined)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from docetl_spark.cdc.merge import compute_batch_stats
+    def look_ahead(group):
+        bid = int(max(group))
+        if is_mor:
+            return pool.submit(_merge.prepare_mor_merge, spark, table, batch_df(group), bid,
+                               assumed, stages=stages, winner_stages=winner_stages)
+        return pool.submit(_merge.compute_batch_stats, table, batch_df(group), bid, stages)
 
     out: list[MergeMetrics] = []
-    if mode == "mor" and os.environ.get("SPARK_GRAFT_MOR_PIPELINE", "1") != "0":
-        return _replay_mor_pipelined(
-            spark, table, groups, batch_df, stages, winner_stages,
-            metrics_path, compact_every, changelog,
-        )
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = None
-        for i, group in enumerate(groups, start=1):
-            bid = int(max(group))
-            pre = None
-            if fut is not None:
-                try:
-                    pre = fut.result()
-                except Exception:
-                    pre = None  # prefetch is an optimization, never a failure
-            if i < len(groups):
-                nxt = groups[i]
-                fut = pool.submit(compute_batch_stats, table, batch_df(nxt), int(max(nxt)), stages)
-            else:
-                fut = None
-            m = merge_apply(spark, table, batch_df(group), bid,
-                            stages=stages, winner_stages=winner_stages, mode=mode,
-                            precomputed=pre, changelog=changelog)
-            out.append(m)
-            if metrics_path:
-                os.makedirs(os.path.dirname(metrics_path) or ".", exist_ok=True)
-                with open(metrics_path, "a") as f:
-                    f.write(json.dumps(m.to_dict()) + "\n")
-            if compact_every and i % compact_every == 0:
-                compact_state(spark, table)
-    return out
-
-
-def _replay_mor_pipelined(
-    spark: SparkSession,
-    table: LakeTable,
-    groups: list[list[int]],
-    batch_df,
-    stages: Iterable[TransformStage],
-    winner_stages: Iterable[TransformStage],
-    metrics_path: str | None,
-    compact_every: int | None,
-    changelog: bool,
-) -> list[MergeMetrics]:
-    """MOR replay with WRITE-JOB pipelining (guide §2.6): a MOR merge never
-    reads table state, so consecutive batches' prepare phases (stats +
-    winner dedup + bucket-file write) are independent — only the fenced
-    commits must stay ordered. Two prepare workers keep the next batch's
-    write job in the scheduler while the current one drains its stragglers
-    (FIFO scheduling back-fills freed executors); the main thread publishes
-    the commits strictly in batch order, so exactly-once, fence
-    monotonicity and the change feed's per-commit deltas are byte-identical
-    to serial replay. A prepare whose assumptions drift (in-flight schema
-    evolution, rebucket) is discarded — its files were never referenced —
-    and the batch re-runs through the classic serial merge; later prepares
-    restart from the refreshed snapshot. Disable with
-    SPARK_GRAFT_MOR_PIPELINE=0."""
-    from collections import deque
-    from concurrent.futures import ThreadPoolExecutor
-
-    from docetl_spark.cdc.merge import commit_prepared_merge, merge_apply, prepare_mor_merge
-
-    out: list[MergeMetrics] = []
-    # one in-flight write + one back-filling by default; deeper pipelines
-    # add concurrent shuffle/write pressure on shared disks — measure
-    # before raising (scale-adaptive knob, guide §2.6)
-    depth = max(1, int(os.environ.get("SPARK_GRAFT_MOR_PIPELINE_DEPTH", "2")))
+    ahead: dict = {}
+    nxt = first
     with ThreadPoolExecutor(max_workers=depth) as pool:
-        assumed = table.snapshot()
-
-        def submit(group):
-            return pool.submit(
-                prepare_mor_merge, spark, table, batch_df(group), int(max(group)),
-                assumed, stages=stages, winner_stages=winner_stages,
-            )
-
-        futs: deque = deque()
-        for g in groups[:depth]:
-            futs.append(submit(g))
-        for i, group in enumerate(groups, start=1):
-            bid = int(max(group))
-            prep = futs.popleft().result()
-            m = commit_prepared_merge(table, prep) if prep is not None else None
+        for i, group in enumerate(groups):
+            while nxt < min(i + first + depth, len(groups)):
+                ahead[nxt] = look_ahead(groups[nxt])
+                nxt += 1
+            got = None
+            if i in ahead:
+                try:
+                    got = ahead.pop(i).result()
+                except Exception:
+                    got = None  # look-ahead is an optimization, never a failure
+            m = _merge.commit_prepared_merge(table, got) if is_mor and got is not None else None
             if m is None:
-                # assumptions drifted (or fence already past): classic merge
-                # owns this batch, then later prepares rebuild on the fresh
-                # snapshot (in-flight ones self-invalidate at commit)
-                m = merge_apply(spark, table, batch_df(group), bid,
-                                stages=stages, winner_stages=winner_stages,
-                                mode="mor", changelog=changelog)
-                assumed = table.snapshot()
-            if i + depth - 1 < len(groups):
-                futs.append(submit(groups[i + depth - 1]))
+                # no usable look-ahead (none, failed, or drifted
+                # assumptions): the serial merge owns this batch; later
+                # MOR prepares rebuild on the fresh snapshot (in-flight
+                # ones self-invalidate at commit)
+                m = _merge.merge_apply(spark, table, batch_df(group), int(max(group)),
+                                       stages=stages, winner_stages=winner_stages, mode=mode,
+                                       precomputed=None if is_mor else got, changelog=changelog)
+                if is_mor:
+                    assumed = table.snapshot()
             out.append(m)
             if metrics_path:
                 os.makedirs(os.path.dirname(metrics_path) or ".", exist_ok=True)
                 with open(metrics_path, "a") as f:
                     f.write(json.dumps(m.to_dict()) + "\n")
-            if compact_every and i % compact_every == 0:
+            if compact_every and (i + 1) % compact_every == 0:
                 compact_state(spark, table)
     return out

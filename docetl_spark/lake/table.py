@@ -98,6 +98,10 @@ class Snapshot:
     # are never pruned (older files stay safe after enabling stats).
     stats_cols: list[str] | None = None
     file_stats: dict = field(default_factory=dict)
+    # {relpath: size in bytes}, recorded at commit for every live file so
+    # size gates never stat the data files. Files committed before sizes
+    # were recorded have no entry.
+    file_bytes: dict = field(default_factory=dict)
 
     @property
     def all_files(self) -> list[str]:
@@ -147,6 +151,7 @@ class LakeTable:
             bucket_cols=list(bucket_cols) if bucket_cols else None,
             stats_cols=list(stats_cols) if stats_cols else None,
             file_stats={},
+            file_bytes={},
         )
         return t
 
@@ -185,6 +190,7 @@ class LakeTable:
             bucket_cols=m.get("bucket_cols"),
             stats_cols=m.get("stats_cols"),
             file_stats=m.get("file_stats", {}),
+            file_bytes=m.get("file_bytes", {}),
         )
 
     # -- read ----------------------------------------------------------------
@@ -376,12 +382,16 @@ class LakeTable:
         # file-skipping stats: carry bounds of surviving files, footer-read
         # the new ones (centralized here so every writer — merge, compact,
         # rebucket, index maintenance — gets manifest stats for free)
+        live = {f for fl in files.values() for f in fl}
+        new_paths = [f for fl in new_files_by_bucket.values() for f in fl]
         file_stats: dict = {}
         if cur.stats_cols:
-            live = {f for fl in files.values() for f in fl}
             file_stats = {f: s for f, s in cur.file_stats.items() if f in live}
-            new_paths = [f for fl in new_files_by_bucket.values() for f in fl]
             file_stats.update(self._collect_file_stats(new_paths, cur.stats_cols))
+        # file sizes, same rule: surviving files carry theirs, new ones are
+        # stat'ed once here
+        file_bytes = {f: n for f, n in cur.file_bytes.items() if f in live}
+        file_bytes.update({f: os.path.getsize(os.path.join(self.path, f)) for f in new_paths})
         self._write_meta(
             version=cur.version + 1,
             schema=schema or cur.schema,
@@ -393,11 +403,12 @@ class LakeTable:
             bucket_cols=cur.bucket_cols,
             stats_cols=cur.stats_cols,
             file_stats=file_stats,
+            file_bytes=file_bytes,
         )
         return self.snapshot()
 
     def _write_meta(self, version, schema, num_buckets, key_cols, files, properties, summary,
-                    bucket_cols=None, stats_cols=None, file_stats=None):
+                    bucket_cols=None, stats_cols=None, file_stats=None, file_bytes=None):
         meta = {
             "version": version,
             "schema": schema.jsonValue(),
@@ -407,6 +418,7 @@ class LakeTable:
             "properties": properties,
             "summary": summary,
             "timestamp_ms": int(time.time() * 1000),
+            "file_bytes": file_bytes or {},
         }
         if bucket_cols:
             meta["bucket_cols"] = list(bucket_cols)

@@ -207,7 +207,7 @@ def test_compact_preserves_state_and_reduces_files(spark, tmp_path, events, monk
     # disable the small-state consolidating write so the replay fragments
     # bucket files the way a wide-row (above-gate) table would — that is
     # the state compaction exists to clean up
-    monkeypatch.setenv("SPARK_GRAFT_COW_CONSOLIDATE_BYTES", "0")
+    monkeypatch.setattr("docetl_spark.cdc.merge.COW_CONSOLIDATE_BYTES", 0)
     table = create_cdc_table(str(tmp_path / "t"), ["repo", "path", "commit"], num_buckets=4)
     replay_events(spark, table, events)
     before = read_state(spark, table).sort("repo", "path", "commit", "lsn").collect()
@@ -631,11 +631,11 @@ def test_fused_small_merge_equals_classic_path(spark, tmp_path, events, monkeypa
     stored-row-wins-on-equal-LSN rule — and every rewritten bucket must
     land in exactly one file (the consolidating write)."""
     # classic path (gate forced off)
-    monkeypatch.setenv("SPARK_GRAFT_COW_CONSOLIDATE_BYTES", "0")
+    monkeypatch.setattr("docetl_spark.cdc.merge.COW_CONSOLIDATE_BYTES", 0)
     t_classic = create_cdc_table(str(tmp_path / "classic"), KEYS, num_buckets=4)
     replay_events(spark, t_classic, events)
     # fused path (gate wide open)
-    monkeypatch.setenv("SPARK_GRAFT_COW_CONSOLIDATE_BYTES", str(1 << 40))
+    monkeypatch.setattr("docetl_spark.cdc.merge.COW_CONSOLIDATE_BYTES", 1 << 40)
     t_fused = create_cdc_table(str(tmp_path / "fused"), KEYS, num_buckets=4)
     replay_events(spark, t_fused, events)
 
@@ -661,3 +661,37 @@ def test_fused_small_merge_equals_classic_path(spark, tmp_path, events, monkeypa
             (F.col("repo") == "r0") & (F.col("path") == "p0") & (F.col("commit") == "c0")
         ).collect()
         assert after[0]["content"] == stored[0]["content"] != "late-duplicate"
+
+
+def test_file_bytes_recorded_by_every_writer(spark, tmp_path, events):
+    """The CoW consolidation gate reads per-file sizes from metadata, so
+    every writer (merge, widen-rewrite, compact, rebucket) must record the
+    size of each new file, carry surviving files' sizes forward and drop
+    replaced ones — and vacuum must leave them true."""
+    from docetl_spark.cdc import compact_state
+
+    table = create_cdc_table(str(tmp_path / "t"), KEYS, num_buckets=4)
+
+    def check(op):
+        snap = table.snapshot()
+        assert snap.summary.get("operation") == op
+        assert snap.all_files and set(snap.file_bytes) == set(snap.all_files)
+        for f in snap.all_files:
+            assert snap.file_bytes[f] == os.path.getsize(os.path.join(table.path, f))
+
+    replay_events(spark, table, events.filter("batch_id <= 1"))
+    check("merge")
+    merge_apply(spark, table, events.filter("batch_id = 2"), 2, mode="mor")
+    check("merge")
+    # a long payload column widened to double forces a widen-rewrite commit
+    one = "lsn long, op string, repo string, path string, commit string, n {}"
+    merge_apply(spark, table, spark.createDataFrame([(10**9, "I", "r", "p", "c", 1)], one.format("long")), 3)
+    merge_apply(spark, table, spark.createDataFrame([(10**9 + 1, "I", "r", "p", "c", 1.5)], one.format("double")), 4)
+    assert "widen-rewrite" in [h["operation"] for h in table.history()]
+    check("merge")
+    compact_state(spark, table)
+    check("compact")
+    table.rebucket(spark, 8)
+    check("rebucket")
+    table.vacuum()
+    check("rebucket")

@@ -122,22 +122,27 @@ def test_compact_after_mode_switch_restores_unique_keys(spark, tmp_path):
     assert got == want
 
 
-def test_mor_pipelined_equals_serial_replay(spark, tmp_path, monkeypatch):
+def _serial_mor(spark, table, events, **kw):
+    """The serial reference: one merge_apply(mode="mor") per batch."""
+    bids = sorted(r[0] for r in events.select("batch_id").distinct().collect())
+    return [merge_apply(spark, table, events.filter(F.col("batch_id") == b), b, mode="mor", **kw)
+            for b in bids]
+
+
+def test_mor_pipelined_equals_serial_replay(spark, tmp_path):
     # the write-job pipeline must be invisible in every observable: final
     # state, fence, delta flag, commit-per-batch history, and winner-stage
     # output (the bench shape). Batch 0 additionally exercises the
     # evolution fallback: the fresh table evolves its schema on the first
-    # batch, so its prepare self-invalidates and the classic path owns it.
+    # batch, so its prepare self-invalidates and the serial merge owns it.
     events = _events(spark)
     stage = [lambda df: df.withColumn("n_chars", F.length("content"))]
 
     t_pipe = create_cdc_table(str(tmp_path / "pipe"), KEYS, num_buckets=4)
-    monkeypatch.delenv("SPARK_GRAFT_MOR_PIPELINE", raising=False)
     m_pipe = replay_events(spark, t_pipe, events, mode="mor", winner_stages=stage)
 
     t_ser = create_cdc_table(str(tmp_path / "ser"), KEYS, num_buckets=4)
-    monkeypatch.setenv("SPARK_GRAFT_MOR_PIPELINE", "0")
-    m_ser = replay_events(spark, t_ser, events, mode="mor", winner_stages=stage)
+    m_ser = _serial_mor(spark, t_ser, events, winner_stages=stage)
 
     cols = [*KEYS, "lsn", "lang", "content", "n_chars"]
     assert df_rows(read_state(spark, t_pipe).select(*cols)) == df_rows(
@@ -152,3 +157,98 @@ def test_mor_pipelined_equals_serial_replay(spark, tmp_path, monkeypatch):
     # fenced redelivery under the pipeline: a second replay is a no-op
     m2 = replay_events(spark, t_pipe, events, mode="mor", winner_stages=stage)
     assert m2 == [] and t_pipe.snapshot().version == sp.version
+
+
+def test_failed_speculative_prepare_falls_back_to_serial_merge(spark, tmp_path, monkeypatch):
+    # a look-ahead prepare that RAISES is not a replay failure: the batch
+    # runs through the serial merge, exactly like a refused prepare
+    import docetl_spark.cdc.merge as merge_mod
+
+    events = _events(spark)
+    real = merge_mod.prepare_mor_merge
+    outcome = {}
+
+    def flaky(spark_, table, batch, batch_id, *args, **kwargs):
+        if batch_id == 2:
+            outcome[batch_id] = "raised"
+            raise RuntimeError("speculative prepare lost its executor")
+        prep = real(spark_, table, batch, batch_id, *args, **kwargs)
+        outcome[batch_id] = "none" if prep is None else "prepared"
+        return prep
+
+    monkeypatch.setattr(merge_mod, "prepare_mor_merge", flaky)
+    t_pipe = create_cdc_table(str(tmp_path / "pipe"), KEYS, num_buckets=4)
+    m_pipe = replay_events(spark, t_pipe, events, mode="mor")
+    assert outcome[2] == "raised" and outcome[3] == "prepared"
+
+    t_ser = create_cdc_table(str(tmp_path / "ser"), KEYS, num_buckets=4)
+    m_ser = _serial_mor(spark, t_ser, events)
+
+    cols = [*KEYS, "lsn", "lang", "content"]
+    assert df_rows(read_state(spark, t_pipe).select(*cols)) == df_rows(
+        read_state(spark, t_ser).select(*cols)
+    )
+    sp, ss = t_pipe.snapshot(), t_ser.snapshot()
+    assert sp.properties["cdc.last-batch-id"] == ss.properties["cdc.last-batch-id"] == "3"
+    assert sp.version == ss.version
+    assert [m.batch_id for m in m_pipe] == [m.batch_id for m in m_ser]
+
+
+def test_empty_batch_summaries_match_across_paths(spark, tmp_path, monkeypatch):
+    # a fence-only commit records the same summary keys whichever path
+    # wrote it: serial MOR, pipelined MOR replay, serial CoW
+    import docetl_spark.cdc.merge as merge_mod
+
+    events = _events(spark)
+    first = events.filter(F.col("batch_id") == 0)
+    empty = events.filter(F.col("batch_id") == 1).limit(0)
+    published = []
+    real_commit = merge_mod.commit_prepared_merge
+
+    def spy(table, prep, *args, **kwargs):
+        m = real_commit(table, prep, *args, **kwargs)
+        published.append(m is not None and not m.skipped)
+        return m
+
+    monkeypatch.setattr(merge_mod, "commit_prepared_merge", spy)
+    summaries = {}
+    for how, mode in [("mor", "mor"), ("pipelined", "mor"), ("cow", "cow")]:
+        t = create_cdc_table(str(tmp_path / how), KEYS, num_buckets=4)
+        # batch 0 evolves the schema, so the empty batch's prepare is usable
+        merge_apply(spark, t, first, 0, mode=mode)
+        if how == "pipelined":
+            replay_events(spark, t, empty, mode="mor", batch_ids=[1])
+        else:
+            merge_apply(spark, t, empty, 1, mode=mode)
+        snap = t.snapshot()
+        assert snap.properties["cdc.last-batch-id"] == "1"
+        summaries[how] = snap.summary
+    assert published == [True]  # the pipelined empty batch took the prepare path
+    assert set(summaries["mor"]) == set(summaries["pipelined"]) == set(summaries["cow"])
+    assert [summaries[h]["mode"] for h in ("mor", "pipelined", "cow")] == ["mor", "mor", "cow"]
+    assert all(s["keys_in_batch"] == 0 for s in summaries.values())
+
+
+def test_mor_single_phase_above_broadcast_limit_matches_oracle(spark, tmp_path, monkeypatch):
+    # a winner set over broadcast_key_limit takes the single-phase
+    # struct-max instead of the (key, lsn) join-back; same final state
+    import docetl_spark.cdc.merge as merge_mod
+
+    events = _events(spark)
+    calls = []
+    real = merge_mod.dedup_last_writer
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(merge_mod, "dedup_last_writer", spy)
+    table = create_cdc_table(str(tmp_path / "t"), KEYS, num_buckets=4)
+    metrics = _serial_mor(spark, table, events, broadcast_key_limit=1)
+    assert len(calls) == len(metrics) == 4  # one struct-max per batch
+    assert all(m.keys_in_batch < m.events_in for m in metrics)  # not insert-only
+    monkeypatch.undo()
+
+    got = df_rows(read_state(spark, table).select(*KEYS, "lsn", "content"))
+    want = df_rows(final_state_oracle(events).select(*KEYS, "lsn", "content"))
+    assert got == want
